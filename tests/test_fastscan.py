@@ -9,12 +9,12 @@ import pyspark.sql.functions as F
 def test_fastscan_states_equal_dataframe_path(spark, transcripts_path):
     from zetasketch_spark.operators.agg import (
         SKETCH_COL, sketch_merge, sketch_partial)
-    from zetasketch_spark.operators.fastscan import sketch_agg_fastscan
+    from zetasketch_spark.operators.fastscan import sketch_agg_rdd
     from zetasketch_spark.sketches.base import HllFamily
     from zetasketch_spark.sources.transcripts import load_transcripts
 
     fam = HllFamily(precision=13)
-    fast = {r["role"]: bytes(r[SKETCH_COL]) for r in sketch_agg_fastscan(
+    fast = {r["role"]: bytes(r[SKETCH_COL]) for r in sketch_agg_rdd(
         spark, transcripts_path, ["role"], "conv_id", fam, keep_sketch=True).collect()}
     df = load_transcripts(spark, transcripts_path)
     pipe = {r["role"]: bytes(r[SKETCH_COL]) for r in

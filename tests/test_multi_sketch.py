@@ -185,3 +185,63 @@ def test_analyze_table_dotted_and_ambiguous_names(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="case-ambiguous"):
         analyze_table(amb, cols=["Aa"])
+
+
+def test_dotted_column_names_in_dataframe_fabric(spark):
+    """A dot in a key or value column name is part of the name, never a
+    nested-field path: sketch_agg (fused and keep_sketch merges) and
+    multi_sketch_agg match the same data under plain names."""
+    from zetasketch_spark.operators.agg import sketch_agg
+    from zetasketch_spark.operators.multi import multi_sketch_agg
+    from zetasketch_spark.sketches.base import HllFamily
+
+    plain = spark.createDataFrame([(f"k{i % 3}", i % 17) for i in range(300)],
+                                  "kv string, uid bigint")
+    dotted = plain.toDF("k.v", "user.id")
+
+    def single(df, key, col, keep_sketch):
+        return {r[key]: (r["estimate"], r["rows_seen"]) for r in sketch_agg(
+            df, [key], col, HllFamily(12), keep_sketch=keep_sketch).collect()}
+
+    def multi(df, key, col):
+        return {r[key]: (r["users_estimate"], r["rows_seen"])
+                for r in multi_sketch_agg(
+                    df, [key], {"users": (col, HllFamily(12))}).collect()}
+
+    want = single(plain, "kv", "uid", False)
+    assert len(want) == 3
+    assert single(dotted, "k.v", "user.id", False) == want
+    assert single(dotted, "k.v", "user.id", True) == want
+    assert multi(dotted, "k.v", "user.id") == multi(plain, "kv", "uid")
+
+
+def test_multi_partial_null_and_date_keys_match_single_spec(spark):
+    """multi_sketch_partial groups each Arrow batch with
+    arrow_group_indices: with a nullable bigint key and a date key, every
+    (key, partition) state is byte-identical to sketch_partial run once
+    per spec, the null group included."""
+    import datetime
+
+    from zetasketch_spark.operators.agg import SKETCH_COL, sketch_partial
+    from zetasketch_spark.operators.multi import multi_sketch_partial
+    from zetasketch_spark.sketches.base import HllFamily
+    from zetasketch_spark.sketches.kll import KllFamily
+
+    df = spark.createDataFrame(
+        [(None if i % 7 == 0 else i % 5, datetime.date(2026, 1, 1 + i % 3),
+          f"u{i % 41}", float(i % 97)) for i in range(3000)],
+        "k bigint, d date, user string, v double")
+    specs = {"users": ("user", HllFamily(precision=12)),
+             "lens": ("v", KllFamily(k=200, quantiles=(0.5, 0.9)))}
+    keys = ["k", "d"]
+
+    def by_key(rows, col):
+        return {(r["k"], r["d"], r["partition_id"]): bytes(r[col])
+                for r in rows}
+
+    multi = multi_sketch_partial(df, keys, specs).collect()
+    assert any(r["k"] is None for r in multi)
+    for name, (col, fam) in specs.items():
+        single = by_key(sketch_partial(df, keys, col, fam).collect(),
+                        SKETCH_COL)
+        assert by_key(multi, name) == single

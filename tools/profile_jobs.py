@@ -19,6 +19,10 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# seconds to wait on a Spark UI REST call; a stalled endpoint fails the
+# profile instead of hanging it
+UI_TIMEOUT_S = 30
+
 
 def main():
     ap = argparse.ArgumentParser()
@@ -48,9 +52,11 @@ def main():
 
     run()  # warm (JIT, python workers, broadcast machinery)
     ui = spark.sparkContext.uiWebUrl
-    appid = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))[0]["id"]
+    appid = json.load(urllib.request.urlopen(
+        f"{ui}/api/v1/applications", timeout=UI_TIMEOUT_S))[0]["id"]
     jobs_before = json.load(urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{appid}/jobs?length=1000"))
+        f"{ui}/api/v1/applications/{appid}/jobs?length=1000",
+        timeout=UI_TIMEOUT_S))
     seen = {j["jobId"] for j in jobs_before}
 
     t0 = time.time()
@@ -58,7 +64,8 @@ def main():
     wall = time.time() - t0
 
     jobs = json.load(urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{appid}/jobs?length=1000"))
+        f"{ui}/api/v1/applications/{appid}/jobs?length=1000",
+        timeout=UI_TIMEOUT_S))
     new = sorted((j for j in jobs if j["jobId"] not in seen),
                  key=lambda j: j["jobId"])
     from datetime import datetime

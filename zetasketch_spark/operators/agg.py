@@ -6,9 +6,10 @@ sketches, serialized state protos cross process boundaries, anyone merges
 (`HyperLogLogPlusPlus.java:40-42`, demonstrated by 100 partials -> 1 final in
 `HyperLogLogPlusPlusMergeTest.java:36-73`). Here the host engine is Spark:
 
-* **stage 1 (partial)** — ``mapInPandas``: one pass over each input
-  partition's Arrow batches, one sketch per (group key) per partition,
-  vectorized updates. Output: ``(keys..., sketch binary, rows_seen,
+* **stage 1 (partial)** — ``mapInArrow`` (``mapInPandas`` for families
+  without an Arrow kernel): one pass over each input partition's
+  batches, one sketch per (group key) per partition, vectorized
+  updates. Output: ``(keys..., sketch binary, rows_seen,
   partition_id)``. This is the skew defuser: a hot key costs register
   updates, never a wide shuffle of raw rows — shuffle volume is
   O(#keys x #partitions x state_size), independent of row count.
@@ -19,7 +20,7 @@ sketches, serialized state protos cross process boundaries, anyone merges
 * **stage 3 (result)** — scalar pandas UDF extracts estimates.
 
 Column pruning/pushdown note: stage 1 selects only ``keys + [col]`` before
-the ``mapInPandas`` so Parquet scans read just those columns.
+the ``mapInArrow``/``mapInPandas`` so Parquet scans read just those columns.
 """
 
 from __future__ import annotations
@@ -45,6 +46,45 @@ PARTITION_COL = "partition_id"
 def _key_fields(df: DataFrame, keys: list[str]) -> list[StructField]:
     by_name = {f.name: f for f in df.schema.fields}
     return [by_name[k] for k in keys]
+
+
+def _partial_schema(key_fields: list[StructField],
+                    names=(SKETCH_COL,)) -> StructType:
+    """``keys + (one binary state per name, rows_seen, partition_id)``."""
+    return StructType([*key_fields,
+                       *[StructField(n, BinaryType()) for n in names],
+                       StructField(ROWS_COL, LongType()),
+                       StructField(PARTITION_COL, IntegerType())])
+
+
+def _ref(name: str):
+    """Backtick-quoted column reference, so a dot in a (JSON-ingested)
+    column name is never parsed as a nested-field path."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _positional(df: DataFrame, cols: list[str]) -> DataFrame:
+    """``df`` projected to ``cols`` renamed ``_0, _1, ...``: PySpark's
+    ``mapInArrow``/``mapInPandas``/``applyInPandas`` resolve their input
+    columns with ``df[name]``, which parses a dot in a name as a
+    nested-field path, so the Python functions restore the real names
+    per batch instead."""
+    return df.select(*[_ref(c).alias(f"_{i}") for i, c in enumerate(cols)])
+
+
+def _apply_grouped(df: DataFrame, keys: list[str], fn, schema: StructType,
+                   *extra: str) -> DataFrame:
+    """``df.groupBy(*keys, *extra).applyInPandas(fn, schema)`` for any
+    column names: ``fn`` sees each group under ``df``'s own names."""
+    cols = df.columns
+
+    def named(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf.columns = cols
+        return fn(pdf)
+
+    return _positional(df, cols).groupBy(
+        *[f"_{cols.index(c)}" for c in [*keys, *extra]]).applyInPandas(
+            named, schema)
 
 
 import re as _re
@@ -110,21 +150,17 @@ def sketch_partial(df: DataFrame, keys: list[str], col: str,
                    skip_partitions: frozenset = frozenset()) -> DataFrame:
     """Stage 1: per-(partition, key) partial sketches, vectorized.
 
-    Families with ``supports_arrow`` get the ``mapInArrow`` path: the value
-    column is consumed straight from Arrow buffers (strings never become
-    Python objects), prepared (hashed/cast) once per batch, and
-    group-sliced by numpy indices. Others fall back to pandas batches.
+    Families with ``supports_arrow`` get the ``mapInArrow`` path (the
+    one-spec case of ``multi.multi_sketch_partial``): the value column is
+    consumed straight from Arrow buffers (strings never become Python
+    objects), prepared (hashed/cast) once per batch, and group-sliced by
+    numpy indices. Others (e.g. CountMin, CountSketch) fall back to pandas
+    batches: ``mapInArrow`` + ``to_pandas`` would surface timestamps as
+    tz-aware microseconds where ``mapInPandas`` gives naive nanoseconds,
+    which would change those families' states over timestamp columns.
 
     ``skip_partitions``: partition ids to return immediately for (without
     hashing/sketching their batches) — the checkpoint-resume hook."""
-    out_schema = StructType(
-        _key_fields(df, keys)
-        + [StructField(SKETCH_COL, BinaryType()),
-           StructField(ROWS_COL, LongType()),
-           StructField(PARTITION_COL, IntegerType())]
-    )
-    keys_t = tuple(keys)
-
     # Pin the hash domain from the Spark schema (single rule:
     # functions.sketch_udfs.pin_value_type; returns a copy, never mutates
     # the caller's family or its checkpoint query_signature).
@@ -159,8 +195,10 @@ def sketch_partial(df: DataFrame, keys: list[str], col: str,
                 _key_fields(df, keys))
 
     if getattr(family, "supports_arrow", False):
-        return _sketch_partial_arrow(df, keys, col, family, out_schema,
-                                     skip_partitions)
+        from zetasketch_spark.operators.multi import _arrow_partial
+
+        return _arrow_partial(df, keys, {SKETCH_COL: (col, family)},
+                              skip_partitions)
 
     def partial_fn(batches):
         ctx = TaskContext.get()
@@ -170,10 +208,11 @@ def sketch_partial(df: DataFrame, keys: list[str], col: str,
         acc: dict = {}
         rows: dict = {}
         for pdf in batches:
-            if len(keys_t) == 0:
+            pdf.columns = [*keys, col]
+            if not keys:
                 grouped = [((), pdf)]
             else:
-                grouped = pdf.groupby(list(keys_t), sort=False, dropna=False)
+                grouped = pdf.groupby(keys, sort=False, dropna=False)
             for key, grp in grouped:
                 if not isinstance(key, tuple):
                     key = (key,)
@@ -187,61 +226,11 @@ def sketch_partial(df: DataFrame, keys: list[str], col: str,
         if acc:
             yield pd.DataFrame(
                 [[*k, family.serialize(s), rows[k], pid] for k, s in acc.items()],
-                columns=[*keys_t, SKETCH_COL, ROWS_COL, PARTITION_COL],
+                columns=[*keys, SKETCH_COL, ROWS_COL, PARTITION_COL],
             )
 
-    return df.select(*keys, col).mapInPandas(partial_fn, out_schema)
-
-
-def _sketch_partial_arrow(df: DataFrame, keys: list[str], col: str,
-                          family: SketchFamily, out_schema: StructType,
-                          skip_partitions: frozenset = frozenset()) -> DataFrame:
-    import numpy as np
-    import pyarrow as pa
-
-    keys_t = tuple(keys)
-
-    def partial_fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        if pid in skip_partitions:
-            return
-        acc: dict = {}
-        rows: dict = {}
-        for batch in batches:
-            val = batch.column(batch.schema.get_field_index(col))
-            prepared = family.prepare_arrow(val)
-            if keys_t:
-                from zetasketch_spark.operators.grouping import \
-                    arrow_group_indices
-
-                groups = arrow_group_indices(
-                    {k: batch.column(batch.schema.get_field_index(k))
-                     for k in keys_t})
-            else:
-                groups = {(): np.arange(batch.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-        if acc:
-            import pandas as pd
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            out = pd.DataFrame(
-                [[*k, family.serialize(s), rows[k], pid] for k, s in acc.items()],
-                columns=[*keys_t, SKETCH_COL, ROWS_COL, PARTITION_COL],
-            )
-            yield pa.RecordBatch.from_pandas(
-                out, schema=to_arrow_schema(out_schema), preserve_index=False)
-
-    return df.select(*keys, col).mapInArrow(partial_fn, out_schema)
+    return _positional(df, [*keys, col]).mapInPandas(
+        partial_fn, _partial_schema(_key_fields(df, keys)))
 
 
 def sketch_merge(partials: DataFrame, keys: list[str], family: SketchFamily,
@@ -284,12 +273,13 @@ def sketch_merge(partials: DataFrame, keys: list[str], family: SketchFamily,
             return pd.DataFrame([[*head, blob, int(pdf[ROWS_COL].sum()), int(pdf.iloc[0]["_salt"])]],
                                 columns=[*keys, SKETCH_COL, ROWS_COL, "_salt"])
 
-        level1 = salted.groupBy(*keys, "_salt").applyInPandas(merge_salted, salted_schema)
+        level1 = _apply_grouped(salted, keys, merge_salted, salted_schema,
+                                "_salt")
         if _stop_after_salt:
             return level1  # caller fuses the final merge with extraction
-        return level1.groupBy(*keys).applyInPandas(merge_fn, merged_schema)
+        return _apply_grouped(level1, keys, merge_fn, merged_schema)
 
-    return partials.groupBy(*keys).applyInPandas(merge_fn, merged_schema)
+    return _apply_grouped(partials, keys, merge_fn, merged_schema)
 
 
 def collect_merged_states(partials: DataFrame, keys: list[str],
@@ -399,8 +389,8 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, family: SketchFamily,
     if tree_levels >= 2 and partials.rdd.getNumPartitions() > fan_in:
         level1 = sketch_merge(partials, keys, family, tree_levels=2,
                               fan_in=fan_in, _stop_after_salt=True)
-        return level1.groupBy(*keys).applyInPandas(merge_result_fn, out_schema)
-    return partials.groupBy(*keys).applyInPandas(merge_result_fn, out_schema)
+        return _apply_grouped(level1, keys, merge_result_fn, out_schema)
+    return _apply_grouped(partials, keys, merge_result_fn, out_schema)
 
 
 def hll_count_distinct(df: DataFrame, keys: list[str], col: str,

@@ -44,12 +44,14 @@ def benchmark_shingle_bloom(benchmark: DataFrame, text_col: str = "text",
 def _bloom_from_shingles(shingles: DataFrame, m: int, k: int) -> bytes:
     """Fold a ``shingle`` column into one serialized Bloom digest.
 
-    Bloom insertion is idempotent (bit OR), so the digest bytes are
-    identical whether ``shingles`` carries duplicates or is distinct —
-    which lets :func:`decontaminate` build the digest from the SAME
-    distinct-shingle table its exact-verify join needs, instead of
-    shingling the benchmark twice (r6: the duplicate pandas-UDF pass was
-    ~40% of the digest cost at bench scale)."""
+    Bloom insertion is idempotent (bit OR), so the bit array is
+    identical whether ``shingles`` carries duplicates or is distinct; the
+    insert count ``n_added`` is not, so the serialized blob and
+    ``expected_fpr`` differ, while membership, and hence the flagged
+    candidate set, cannot move. That lets :func:`decontaminate` build the
+    digest from the SAME distinct-shingle table its exact-verify join
+    needs, instead of shingling the benchmark twice (r6: the duplicate
+    pandas-UDF pass was ~40% of the digest cost at bench scale)."""
     from zetasketch_spark.operators.agg import sketch_merge, sketch_partial
     from zetasketch_spark.sketches.bloom import BloomFamily
 

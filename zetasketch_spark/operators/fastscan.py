@@ -1,32 +1,45 @@
-"""Columnar fast path for sketch partials: decode parquet inside the
-Python workers.
+"""The Arrow sketch fabric: one fold, one split planner, one merge.
 
-Why this exists: sketch partial aggregation is an update-heavy leaf — every
-input row crosses into Python, but only tiny serialized states come back.
-Measured on this machine, Spark's JVM->Python Arrow handoff tops out around
-~3M rows/s *regardless of core count* (the JVM decodes fast and Python
-hashes fast, but the boundary is a shared ceiling), which caps scaling.
-Reading the parquet row groups directly with pyarrow inside each worker
-removes the boundary from the per-row path entirely: the JVM ships only
-(file, row-group) split descriptors out and sketch blobs back.
+Every Arrow partial producer in the library runs the sketch "add" step
+through ``_fold``: given an Arrow table (or record batch), its group-key
+arrays and ``{name: (value, family)}`` specs, it prepares (hashes/casts)
+each spec's value column once, slices it per key group
+(``grouping.arrow_group_indices``) and updates one state per spec and a
+row count per key. Its callers:
 
-Scope and honesty:
-* This is a *leaf-scan short circuit* for plain parquet inputs with a
-  column-pruned projection — exactly the pushdown Catalyst would do, done
-  by the source itself (the same trick a DataSourceV2 "python-native scan"
-  would implement). Everything after the partial stage (shuffle, merge,
-  result, joins, windows) stays DataFrame/Catalyst.
-* Filters or non-parquet sources fall back to the mapInArrow path in
-  `zetasketch_spark.operators.agg` (same semantics; tests assert
-  state-level equality between the two paths).
-* At cluster scale the split planning below is what Spark's own
-  FileSourceScan does: row-group-aligned splits, bin-packed by bytes.
+* the RDD fabric — ``sketch_agg_rdd`` (the one-spec case of
+  ``multi_sketch_agg_rdd``) and its file-list form
+  ``sketch_partial_filescan``/``sketch_agg_filescan``, the leaf-scan
+  short circuit behind ``operators.agg.sketch_partial``/``sketch_agg``;
+* the ``mapInArrow`` partial ``operators.multi.multi_sketch_partial``
+  (``sketch_partial``'s Arrow path is its one-spec case).
+
+Why the RDD fabric exists: sketch partial aggregation is an update-heavy
+leaf — every input row crosses into Python, but only tiny serialized
+states come back. Spark's JVM->Python Arrow handoff tops out around ~3M
+rows/s regardless of core count, and the SQL Arrow runner adds a
+multi-second constant per data-bearing Python stage. Reading the parquet
+row groups with pyarrow inside each worker removes the boundary from the
+per-row path: the JVM ships (file, row-group) split descriptors out and
+serialized states back.
+
+Behind the fold sit one split planner (``_scan``: row-group-aligned
+``plan_splits`` bin-packed to 96 MiB, re-planned per row group when that
+leaves fewer splits than cores, run as one wave of ``min(splits, cpus)``
+tasks that each fold all their splits into one state per key), one
+``reduceByKey`` merge (``_merge``) and one row builder (``_keyed``, which
+coerces group keys with ``_coerce_key``). Everything after the partial
+stage of the DataFrame entry points (shuffle, merge, result, joins) stays
+DataFrame/Catalyst; tests assert state equality between the fabrics.
 
 Derived keys: a small expression language (("to_date", col)) covers the
 day-bucket case so `(role, days(ts))` grouping needs no JVM round trip.
 Derived values: the sketched column itself can be an expression —
 ``col=("length", "text")`` sketches the per-row string length (the KLL
 turn-length case) without materializing it through the JVM first.
+Partitioned (Hive/Iceberg ``key=value`` directory) layouts are read
+natively: ``partition_filter`` prunes whole files at planning time, and
+group keys naming partition columns are materialized from the path.
 """
 
 from __future__ import annotations
@@ -35,13 +48,16 @@ import glob as _glob
 import os
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StructField, StructType)
+    BinaryType, LongType, StructField, StructType, _parse_datatype_string)
 
 from zetasketch_spark.operators.agg import (
-    PARTITION_COL, ROWS_COL, SKETCH_COL, sketch_merge, sketch_result)
-from zetasketch_spark.sketches.base import SketchFamily
+    ROWS_COL, SKETCH_COL, _partial_schema)
+from zetasketch_spark.operators.grouping import arrow_group_indices
+
+# split bin-packing target, like Spark's maxPartitionBytes
+SPLIT_BYTES = 96 << 20
 
 
 def partition_values(f: str, root: str) -> dict[str, str]:
@@ -56,7 +72,7 @@ def partition_values(f: str, root: str) -> dict[str, str]:
     return out
 
 
-def plan_splits(path: str, target_bytes: int = 96 << 20,
+def plan_splits(path: str, target_bytes: int = SPLIT_BYTES,
                 partition_filter: dict | None = None,
                 ) -> list[tuple[str, list[int]]]:
     """Row-group-aligned splits bin-packed to ~target_bytes, like
@@ -217,8 +233,9 @@ def _plan_key_types(splits, keys, derived, part_keys) -> list[str]:
 
 
 def _coerce_key(v, t):
-    # pandas surfaces nullable int keys as floats with NaN — restore
-    # the declared type (None for NaN) so the explicit schema accepts it
+    # keys come from arrow_group_indices, whose pandas fallback surfaces
+    # nullable int keys as floats with NaN — restore the declared type
+    # (None for NaN) so the explicit schema accepts it
     import math
 
     if isinstance(v, np.generic):
@@ -232,98 +249,144 @@ def _coerce_key(v, t):
     return v
 
 
-def sketch_partial_fastscan(
-    spark: SparkSession,
-    path: str,
-    keys: list[str],
-    col: str,
-    family: SketchFamily,
-    key_schema: list[tuple[str, str]] | None = None,
-    derived_keys: dict | None = None,
-    target_split_bytes: int = 96 << 20,
-) -> DataFrame:
-    """Stage 1 over a parquet directory, decoding in the workers.
+def _fold(tbl, key_arrays: dict, specs: dict, acc: dict, rows: dict):
+    """The one sketch update loop. Folds Arrow ``tbl`` into ``acc[key]``
+    (a list of states in ``specs`` order) and ``rows[key]``;
+    ``key_arrays`` is ``{name: Arrow array}`` (empty: one global group)."""
+    fams = [fam for _, fam in specs.values()]
+    prepared = [fam.prepare_arrow(_derive_value_array(tbl, c))
+                for c, fam in specs.values()]
+    groups = (arrow_group_indices(key_arrays) if key_arrays
+              else {(): np.arange(tbl.num_rows)})
+    for key, idx in groups.items():
+        states = acc.get(key)
+        if states is None:
+            states = acc[key] = [fam.make() for fam in fams]
+            rows[key] = 0
+        for fam, state, values in zip(fams, states, prepared):
+            fam.update_prepared(state, values[idx])
+        rows[key] += len(idx)
 
-    ``derived_keys``: {out_name: (op, source_col)} with op in
-    {"to_date", "date_str"}. ``key_schema``: [(name, spark_type_str)] for
-    derived keys (plain columns are inferred by reading one footer)."""
-    import pyarrow.parquet as pq
 
-    derived = derived_keys or {}
-    splits = plan_splits(path, target_split_bytes)
-    read_cols = sorted({_value_source(col),
-                        *[k for k in keys if k not in derived],
+def _drain(acc: dict, rows: dict, specs: dict):
+    """``(key, serialized states, rows)`` per key folded by ``_fold``."""
+    fams = [fam for _, fam in specs.values()]
+    for key, states in acc.items():
+        yield key, tuple(f.serialize(s) for f, s in zip(fams, states)), rows[key]
+
+
+def _keyed(key, key_types, tail) -> tuple:
+    """The one row builder: group key coerced to its declared Spark types,
+    then ``tail``."""
+    return (*(_coerce_key(v, t) for v, t in zip(key, key_types)), *tail)
+
+
+def _scan(sc, path, keys, specs, derived: dict, partition_filter=None):
+    """The one split planner: an RDD of ``(key, (serialized states,
+    rows))``, one record per (task, key), plus the splits and the keys
+    materialized from partition paths.
+
+    Several splits per task: one accumulated state per (task, key) crosses
+    the boundary instead of one per (split, key). One wave of cpus tasks,
+    not two: more tasks means more per-task partial states (every one is
+    serialized, shuffled and re-merged) plus scheduling overhead —
+    measured 0.9 s -> 0.63 s for the map stage at 80 splits / 32 cores.
+    Splits are size-binned, so one wave stays balanced."""
+    cpus = sc.defaultParallelism
+    splits = plan_splits(path, SPLIT_BYTES, partition_filter)
+    if 0 < len(splits) < cpus:
+        # under-parallel input (e.g. one ~150MB file): re-plan at
+        # row-group granularity so every row group is its own task
+        # instead of 1-2 byte-binned splits (measured 4.5 s -> ~1 s on a
+        # 10M-row single-file table at sf10)
+        splits = plan_splits(path, 1, partition_filter)
+    # a pre-resolved file list has no partition columns
+    part_cols = (set(partition_values(splits[0][0], path))
+                 if splits and isinstance(path, str) else set())
+    part_keys = {k for k in keys if k in part_cols and k not in derived}
+    read_cols = sorted({*[_value_source(c) for c, _ in specs.values()],
+                        *[k for k in keys
+                          if k not in derived and k not in part_keys],
                         *[src for (_, src) in derived.values()]})
+    items = [(f, rgs, partition_values(f, path) if part_keys else None)
+             for f, rgs in splits]
 
-    # output schema: derive plain key types from the parquet schema
-    sample_schema = pq.read_schema(splits[0][0])
-    type_map = {"string": "string", "large_string": "string", "int64": "bigint",
-                "int32": "int", "double": "double", "float": "float",
-                "timestamp[us]": "timestamp", "date32[day]": "date"}
-    ks = dict(key_schema or [])
-    fields = []
-    from pyspark.sql.types import _parse_datatype_string
+    def run_task(it):
+        import pyarrow.parquet as pq
 
-    for k in keys:
-        if k in ks:
-            fields.append(StructField(k, _parse_datatype_string(ks[k])))
-        elif k in derived:
-            op = derived[k][0]
-            fields.append(StructField(k, _parse_datatype_string(
-                "date" if op == "to_date" else "string")))
-        else:
-            pa_t = str(sample_schema.field(k).type)
-            fields.append(StructField(k, _parse_datatype_string(type_map[pa_t])))
-    out_schema = StructType(fields + [
-        StructField(SKETCH_COL, BinaryType()),
-        StructField(ROWS_COL, LongType()),
-        StructField(PARTITION_COL, IntegerType()),
-    ])
+        acc: dict = {}
+        rows: dict = {}
+        for f, rgs, pv in it:
+            tbl = pq.ParquetFile(f).read_row_groups(
+                rgs, columns=read_cols, use_threads=False).combine_chunks()
+            _fold(tbl, _derive_key_arrays(tbl, keys, derived, pv), specs,
+                  acc, rows)
+        for key, blobs, n in _drain(acc, rows, specs):
+            yield key, (blobs, n)
 
+    rdd = sc.parallelize(items, max(1, min(len(splits), cpus)))
+    return rdd.mapPartitions(run_task), splits, part_keys
+
+
+def _merge(states, specs: dict, n_splits: int, cpus: int):
+    """The one ``reduceByKey`` merge of ``_scan`` records."""
+    fams = [fam for _, fam in specs.values()]
+
+    def merge_pair(a, b):
+        return (tuple(f.serialize(f.merge(f.deserialize(x), f.deserialize(y)))
+                      for f, x, y in zip(fams, a[0], b[0])),
+                a[1] + b[1])
+
+    # reduce-side width: every reduce partition is a Python-worker round
+    # trip; with key counts far below the partition count most trips carry
+    # almost nothing (measured 1.6 s -> 1.3 s going 64 -> 16 at 465 keys).
+    # Scale-adaptive: half the cores locally, capped at 64 on big clusters.
+    return states.reduceByKey(
+        merge_pair, numPartitions=max(4, min(64, max(cpus // 2, 4), n_splits)))
+
+
+def _agg(spark, path, keys, specs, derived_keys=None, partition_filter=None,
+         key_fields=None, keep_sketch=False, prefix=False) -> DataFrame:
+    """Scan, merge and result rows: ``keys + rows_seen + result fields``
+    (named ``<spec>_<field>`` with ``prefix``), then with ``keep_sketch``
+    each spec's merged state. Key types come from ``key_fields`` or else
+    the first split's parquet footer.
+
+    Estimate extraction stays distributed: the result rows are mapped from
+    the merged states and the DataFrame is built from the RDD with an
+    explicit schema — no driver collect, so a high-cardinality group key
+    is as safe here as in the DataFrame path."""
     sc = spark.sparkContext
-    n_parts = len(splits)
-    rdd = sc.parallelize(list(enumerate(splits)), n_parts)
+    derived = derived_keys or {}
+    states, splits, part_keys = _scan(sc, path, keys, specs, derived,
+                                      partition_filter)
+    merged = _merge(states, specs, len(splits), sc.defaultParallelism)
+    if key_fields is None:
+        key_fields = [
+            StructField(k, _parse_datatype_string(t)) for k, t in
+            zip(keys, _plan_key_types(splits, keys, derived, part_keys))]
+    key_types = [f.dataType.simpleString() for f in key_fields]
+    fams = [fam for _, fam in specs.values()]
+    fields = [*key_fields, StructField(ROWS_COL, LongType())]
+    for n, fam in zip(specs, fams):
+        fields += [StructField(f"{n}_{fn}" if prefix else fn,
+                               _parse_datatype_string(t))
+                   for fn, t in fam.result_fields]
+    if keep_sketch:
+        fields += [StructField(n, BinaryType()) for n in specs]
 
-    keys_t = tuple(keys)
+    def to_row(kv):
+        key, (blobs, rows_seen) = kv
+        res = [x.item() if isinstance(x, np.generic) else x
+               for f, b in zip(fams, blobs) for x in f.result(f.deserialize(b))]
+        return _keyed(key, key_types, (int(rows_seen), *res,
+                                       *(blobs if keep_sketch else ())))
 
-    def run_split(it):
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq  # noqa: F811
-
-        for pid, (f, rgs) in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols, use_threads=False)
-            tbl = tbl.combine_chunks()
-            prepared = family.prepare_arrow(_derive_value_array(tbl, col))
-            acc: dict = {}
-            rows: dict = {}
-            if keys_t:
-                from zetasketch_spark.operators.grouping import \
-                    arrow_group_indices
-                karrs = _derive_key_arrays(tbl, keys_t, derived)
-                groups = arrow_group_indices(karrs)
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-            for k, s in acc.items():
-                yield (*k, family.serialize(s), rows[k], pid)
-
-    return spark.createDataFrame(rdd.mapPartitions(run_split), out_schema)
+    return spark.createDataFrame(merged.map(to_row), StructType(fields))
 
 
 def sketch_partial_filescan(spark, files, keys, col, family,
-                            key_fields: list[StructField],
-                            target_split_bytes: int = 96 << 20) -> DataFrame:
+                            key_fields: list[StructField]) -> DataFrame:
     """Stage-1 partials over an explicit parquet FILE LIST — the leaf-scan
     short circuit behind ``operators.agg.sketch_partial``: when a
     DataFrame is provably a plain column projection of a parquet scan,
@@ -331,67 +394,22 @@ def sketch_partial_filescan(spark, files, keys, col, family,
     JVM->Python Arrow handoff of every row) and returns the SAME
     ``keys + (sketch, rows_seen, partition_id)`` DataFrame the
     ``mapInArrow`` path produces, so merge/result compose unchanged.
-    Splits are row-group-aligned and binned into one wave of ``cpus``
-    tasks; states accumulate across a task's splits, so partial-state
-    volume matches the task count, not the split count."""
-    sc = spark.sparkContext
-    splits = plan_splits(files, target_split_bytes)
-    if 0 < len(splits) < sc.defaultParallelism:
-        # under-parallel input: re-plan at row-group granularity so a
-        # 2-row-group table uses 2 tasks instead of 1 (the bin packing
-        # targets bytes, not cores)
-        splits = plan_splits(files, 1)
-    out_schema = StructType(list(key_fields) + [
-        StructField(SKETCH_COL, BinaryType()),
-        StructField(ROWS_COL, LongType()),
-        StructField(PARTITION_COL, IntegerType()),
-    ])
-    if not splits:
-        return spark.createDataFrame([], out_schema)
-    read_cols = sorted({col, *keys})
-    keys_t = tuple(keys)
-    cpus = sc.defaultParallelism
-    n_tasks = max(1, min(len(splits), cpus))
-    rdd = sc.parallelize(splits, n_tasks)
+    States accumulate across a task's splits, so partial-state volume
+    matches the task count, not the split count."""
+    states, _, _ = _scan(spark.sparkContext, files, keys,
+                         {SKETCH_COL: (col, family)}, {})
+    key_types = [f.dataType.simpleString() for f in key_fields]
 
-    def run_task(it):
-        import pyarrow.parquet as pq  # noqa: F811
-        from pyspark import TaskContext
+    def to_rows(pid, it):
+        for key, (blobs, n) in it:
+            yield _keyed(key, key_types, (*blobs, n, pid))
 
-        from zetasketch_spark.operators.grouping import arrow_group_indices
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        acc: dict = {}
-        rows: dict = {}
-        for f, rgs in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols,
-                                     use_threads=False).combine_chunks()
-            prepared = family.prepare_arrow(_derive_value_array(tbl, col))
-            if keys_t:
-                groups = arrow_group_indices({k: tbl[k] for k in keys_t})
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-        for k, s in acc.items():
-            yield (*k, family.serialize(s), rows[k], pid)
-
-    return spark.createDataFrame(rdd.mapPartitions(run_task), out_schema)
+    return spark.createDataFrame(states.mapPartitionsWithIndex(to_rows),
+                                 _partial_schema(key_fields))
 
 
 def sketch_agg_filescan(spark, files, keys, col, family,
-                        key_fields: list[StructField],
-                        target_split_bytes: int = 96 << 20) -> DataFrame:
+                        key_fields: list[StructField]) -> DataFrame:
     """Full partial->merge->result over an explicit parquet file list,
     entirely in the RDD runner — the fused twin of
     ``sketch_partial_filescan`` for ``sketch_agg(keep_sketch=False)``:
@@ -399,220 +417,34 @@ def sketch_agg_filescan(spark, files, keys, col, family,
     a 2 s query at sf1 while the actual kernel work was ~0.3 s; here only
     serialized states cross the reduceByKey shuffle and the result rows
     materialize straight from the reducer."""
-    sc = spark.sparkContext
-    splits = plan_splits(files, target_split_bytes)
-    fields = list(key_fields) + [StructField(ROWS_COL, LongType())] + [
-        StructField(n, _parse_dt(t)) for n, t in family.result_fields]
-    schema = StructType(fields)
-    if not splits:
-        return spark.createDataFrame([], schema)
-    if len(splits) < sc.defaultParallelism:
-        splits = plan_splits(files, 1)
-    read_cols = sorted({col, *keys})
-    keys_t = tuple(keys)
-    cpus = sc.defaultParallelism
-    n_tasks = max(1, min(len(splits), cpus))
-    rdd = sc.parallelize(splits, n_tasks)
-
-    def run_task(it):
-        import pyarrow.parquet as pq  # noqa: F811
-
-        from zetasketch_spark.operators.grouping import arrow_group_indices
-
-        acc: dict = {}
-        rows: dict = {}
-        for f, rgs in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols,
-                                     use_threads=False).combine_chunks()
-            prepared = family.prepare_arrow(_derive_value_array(tbl, col))
-            if keys_t:
-                groups = arrow_group_indices({k: tbl[k] for k in keys_t})
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-        for k, s in acc.items():
-            yield (k, (family.serialize(s), rows[k]))
-
-    def merge_pair(a, b):
-        return (family.serialize(family.merge(family.deserialize(a[0]),
-                                              family.deserialize(b[0]))),
-                a[1] + b[1])
-
-    n_red = max(4, min(64, max(cpus // 2, 4), len(splits)))
-    merged = rdd.mapPartitions(run_task).reduceByKey(
-        merge_pair, numPartitions=n_red)
-
-    def to_row(kv):
-        key, (blob, rows_seen) = kv
-        rec = [v.item() if isinstance(v, np.generic) else v for v in key]
-        rec.append(int(rows_seen))
-        rec += [x.item() if isinstance(x, np.generic) else x
-                for x in family.result(family.deserialize(blob))]
-        return tuple(rec)
-
-    return spark.createDataFrame(merged.map(to_row), schema)
+    return _agg(spark, files, keys, {SKETCH_COL: (col, family)},
+                key_fields=key_fields)
 
 
-def _parse_dt(t: str):
-    from pyspark.sql.types import _parse_datatype_string
-
-    return _parse_datatype_string(t)
-
-
-def sketch_agg_fastscan(spark, path, keys, col, family,
-                        derived_keys=None, tree_levels: int = 1,
-                        target_split_bytes: int = 96 << 20,
-                        keep_sketch: bool = False) -> DataFrame:
-    partials = sketch_partial_fastscan(
-        spark, path, keys, col, family, derived_keys=derived_keys,
-        target_split_bytes=target_split_bytes)
-    merged = sketch_merge(partials, keys, family, tree_levels=tree_levels)
-    return sketch_result(merged, family, keep_sketch=keep_sketch)
-
-
-def sketch_agg_rdd(spark, path, keys, col, family,
-                   derived_keys=None, target_split_bytes: int = 96 << 20,
-                   reduce_partitions: int | None = None,
+def sketch_agg_rdd(spark, path, keys, col, family, derived_keys=None,
                    keep_sketch: bool = False,
-                   partition_filter: dict | None = None):
+                   partition_filter: dict | None = None) -> DataFrame:
     """Flagship execution fabric: parquet-split scan + ``reduceByKey`` tree
     merge, entirely in the RDD runner.
 
-    Measured on this sandbox, Spark's SQL Arrow runner adds a ~2-3 s
-    constant per data-bearing Python stage (independent of bytes, cores,
-    and batch size), which dominates wall time and destroys the N->4N
-    scaling signal. The plain RDD pipe has ~5 ms/task overhead, so this
-    pipeline keeps the treeAggregate shape (partial per split -> pairwise
-    state merge -> estimate) with only serialized sketch states crossing
-    process boundaries. State equality with the DataFrame path is
-    asserted in tests (same cores, same bytes, same estimates).
+    Spark's SQL Arrow runner adds a ~2-3 s constant per data-bearing
+    Python stage (independent of bytes, cores and batch size); the plain
+    RDD pipe has ~5 ms/task overhead, so this pipeline keeps the
+    treeAggregate shape (partial per task -> pairwise state merge ->
+    estimate) with only serialized sketch states crossing process
+    boundaries. State equality with the DataFrame path is asserted in
+    tests.
 
-    Returns a Spark DataFrame of ``keys + (rows_seen, estimate fields)``.
-
-    Partitioned (Hive/Iceberg ``key=value`` directory) layouts are read
-    natively: ``partition_filter`` prunes whole files at planning time
-    (zero I/O), and group keys naming partition columns are materialized
-    from the path instead of the file.
-    """
-    derived = derived_keys or {}
-    splits = plan_splits(path, target_split_bytes, partition_filter)
-    if 0 < len(splits) < spark.sparkContext.defaultParallelism:
-        # under-parallel input (e.g. one ~150MB file): re-plan at
-        # row-group granularity so every row group is its own task
-        # instead of 1-2 byte-binned splits (measured 4.5 s -> ~1 s on a
-        # 10M-row single-file table at sf10)
-        splits = plan_splits(path, 1, partition_filter)
-    part_cols = set(partition_values(splits[0][0], path)) if splits else set()
-    part_keys = {k for k in keys if k in part_cols and k not in derived}
-    read_cols = sorted({_value_source(col),
-                        *[k for k in keys
-                          if k not in derived and k not in part_keys],
-                        *[src for (_, src) in derived.values()]})
-    sc = spark.sparkContext
-    # several splits per task: one accumulated state per (task, key) crosses
-    # the boundary instead of one per (split, key) — partial-state volume
-    # shrinks by the splits-per-task factor
-    cpus = sc.defaultParallelism
-    # one wave of cpus tasks, not two: more tasks means more per-task
-    # partial states (every (task, key) state is serialized, shuffled and
-    # re-merged) plus scheduling overhead — measured 0.9 s -> 0.63 s for
-    # the map stage at 80 splits / 32 cores. Splits are size-binned, so
-    # one wave stays balanced; huge inputs still get len(splits) >> cpus
-    # rebalancing via the size-capped splits themselves.
-    n_tasks = max(1, min(len(splits), cpus))
-    items = [(f, rgs, partition_values(f, path) if part_keys else None)
-             for f, rgs in splits]
-    rdd = sc.parallelize(items, n_tasks)
-    keys_t = tuple(keys)
-
-    def run_split(it):
-        import pyarrow as pa
-        import pyarrow.parquet as pq  # noqa: F811
-
-        acc: dict = {}
-        rows: dict = {}
-        for f, rgs, pv in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols, use_threads=False)
-            tbl = tbl.combine_chunks()
-            prepared = family.prepare_arrow(_derive_value_array(tbl, col))
-            if keys_t:
-                from zetasketch_spark.operators.grouping import \
-                    arrow_group_indices
-                karrs = _derive_key_arrays(tbl, keys_t, derived, pv)
-                groups = arrow_group_indices(karrs)
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-        for key, state in acc.items():
-            yield (key, (family.serialize(state), rows[key]))
-
-    def merge_pair(a, b):
-        sa = family.deserialize(a[0])
-        sb = family.deserialize(b[0])
-        return (family.serialize(family.merge(sa, sb)), a[1] + b[1])
-
-    # reduce-side width: every reduce partition is a Python-worker round
-    # trip; with key counts far below the partition count most trips carry
-    # almost nothing (measured 1.6 s -> 1.3 s going 64 -> 16 at 465 keys).
-    # Scale-adaptive: half the cores locally, capped at 64 on big clusters
-    # (callers with known huge key cardinality pass reduce_partitions).
-    n_red = reduce_partitions or max(4, min(64, max(cpus // 2, 4), len(splits)))
-    merged = rdd.mapPartitions(run_split).reduceByKey(merge_pair, numPartitions=n_red)
-
-    # estimate extraction stays distributed: map over the merged states and
-    # build the DataFrame from the RDD with an explicit schema — no driver
-    # collect, so a high-cardinality group key is as safe here as in the
-    # DataFrame path (the old collect() shortcut capped this fabric at
-    # driver-memory group counts).
-    from pyspark.sql.types import _parse_datatype_string
-
-    key_types = _plan_key_types(splits, keys, derived, part_keys)
-    fields = [StructField(k, _parse_datatype_string(t))
-              for k, t in zip(keys, key_types)]
-    fields.append(StructField(ROWS_COL, LongType()))
-    fields += [StructField(n, _parse_datatype_string(t))
-               for n, t in family.result_fields]
-    if keep_sketch:
-        fields.append(StructField(SKETCH_COL, BinaryType()))
-
-    def to_row(kv):
-        key, (blob, rows_seen) = kv
-        rec = [_coerce_key(v, t) for v, t in zip(key, key_types)]
-        rec.append(int(rows_seen))
-        rec += [x.item() if isinstance(x, np.generic) else x
-                for x in family.result(family.deserialize(blob))]
-        if keep_sketch:
-            rec.append(blob)
-        return tuple(rec)
-
-    return spark.createDataFrame(merged.map(to_row), StructType(fields))
+    Returns a Spark DataFrame of ``keys + (rows_seen, estimate fields)``,
+    plus the merged ``sketch`` with ``keep_sketch``. ``derived_keys``:
+    ``{out_name: (op, source_col)}`` with op in {"to_date", "date_str"};
+    ``partition_filter`` prunes partitioned layouts at planning time."""
+    return _agg(spark, path, keys, {SKETCH_COL: (col, family)}, derived_keys,
+                partition_filter, keep_sketch=keep_sketch)
 
 
-def multi_sketch_agg_rdd(spark, path, keys, specs,
-                         derived_keys=None,
-                         target_split_bytes: int = 96 << 20,
-                         reduce_partitions: int | None = None,
-                         partition_filter: dict | None = None):
+def multi_sketch_agg_rdd(spark, path, keys, specs, derived_keys=None,
+                         partition_filter: dict | None = None) -> DataFrame:
     """One parquet scan, many sketches, on the flagship RDD fabric.
 
     ``specs``: ``{output_name: (value_col_or_derived, family)}`` — the
@@ -628,106 +460,7 @@ def multi_sketch_agg_rdd(spark, path, keys, specs,
     ``prepare_arrow`` kernel runs on the shared Arrow batch, and only a
     tuple of serialized states per (task, key) crosses the process
     boundary. State equality with per-family ``sketch_agg_rdd`` runs is
-    asserted in tests (same splits, same batches, same estimates).
+    asserted in tests.
     """
-    derived = derived_keys or {}
-    names = list(specs)
-    splits = plan_splits(path, target_split_bytes, partition_filter)
-    if 0 < len(splits) < spark.sparkContext.defaultParallelism:
-        # under-parallel input (e.g. one ~150MB file): re-plan at
-        # row-group granularity so every row group is its own task
-        # instead of 1-2 byte-binned splits (measured 4.5 s -> ~1 s on a
-        # 10M-row single-file table at sf10)
-        splits = plan_splits(path, 1, partition_filter)
-    part_cols = set(partition_values(splits[0][0], path)) if splits else set()
-    part_keys = {k for k in keys if k in part_cols and k not in derived}
-    read_cols = sorted({*[_value_source(c) for c, _ in specs.values()],
-                        *[k for k in keys
-                          if k not in derived and k not in part_keys],
-                        *[src for (_, src) in derived.values()]})
-    sc = spark.sparkContext
-    cpus = sc.defaultParallelism
-    # one wave of cpus tasks, not two: more tasks means more per-task
-    # partial states (every (task, key) state is serialized, shuffled and
-    # re-merged) plus scheduling overhead — measured 0.9 s -> 0.63 s for
-    # the map stage at 80 splits / 32 cores. Splits are size-binned, so
-    # one wave stays balanced; huge inputs still get len(splits) >> cpus
-    # rebalancing via the size-capped splits themselves.
-    n_tasks = max(1, min(len(splits), cpus))
-    items = [(f, rgs, partition_values(f, path) if part_keys else None)
-             for f, rgs in splits]
-    rdd = sc.parallelize(items, n_tasks)
-    keys_t = tuple(keys)
-
-    def run_split(it):
-        import pyarrow as pa
-        import pyarrow.parquet as pq  # noqa: F811
-
-        acc: dict = {}
-        rows: dict = {}
-        for f, rgs, pv in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols, use_threads=False)
-            tbl = tbl.combine_chunks()
-            prepared = {n: fam.prepare_arrow(_derive_value_array(tbl, c))
-                        for n, (c, fam) in specs.items()}
-            if keys_t:
-                from zetasketch_spark.operators.grouping import \
-                    arrow_group_indices
-                karrs = _derive_key_arrays(tbl, keys_t, derived, pv)
-                groups = arrow_group_indices(karrs)
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                states = acc.get(key)
-                if states is None:
-                    states = {n: specs[n][1].make() for n in names}
-                    acc[key] = states
-                    rows[key] = 0
-                for n in names:
-                    specs[n][1].update_prepared(states[n], prepared[n][idx])
-                rows[key] += len(idx)
-        for key, states in acc.items():
-            yield (key, (tuple(specs[n][1].serialize(states[n])
-                               for n in names), rows[key]))
-
-    def merge_pair(a, b):
-        blobs = tuple(
-            specs[n][1].serialize(
-                specs[n][1].merge(specs[n][1].deserialize(ba),
-                                  specs[n][1].deserialize(bb)))
-            for n, ba, bb in zip(names, a[0], b[0]))
-        return (blobs, a[1] + b[1])
-
-    # reduce-side width: every reduce partition is a Python-worker round
-    # trip; with key counts far below the partition count most trips carry
-    # almost nothing (measured 1.6 s -> 1.3 s going 64 -> 16 at 465 keys).
-    # Scale-adaptive: half the cores locally, capped at 64 on big clusters
-    # (callers with known huge key cardinality pass reduce_partitions).
-    n_red = reduce_partitions or max(4, min(64, max(cpus // 2, 4), len(splits)))
-    merged = rdd.mapPartitions(run_split).reduceByKey(
-        merge_pair, numPartitions=n_red)
-
-    from pyspark.sql.types import _parse_datatype_string
-
-    key_types = _plan_key_types(splits, keys, derived, part_keys)
-    fields = [StructField(k, _parse_datatype_string(t))
-              for k, t in zip(keys, key_types)]
-    fields.append(StructField(ROWS_COL, LongType()))
-    for n in names:
-        fields += [StructField(f"{n}_{fn}", _parse_datatype_string(t))
-                   for fn, t in specs[n][1].result_fields]
-
-    def to_row(kv):
-        key, (blobs, rows_seen) = kv
-        rec = [_coerce_key(v, t) for v, t in zip(key, key_types)]
-        rec.append(int(rows_seen))
-        for n, blob in zip(names, blobs):
-            fam = specs[n][1]
-            rec += [x.item() if isinstance(x, np.generic) else x
-                    for x in fam.result(fam.deserialize(blob))]
-        return tuple(rec)
-
-    return spark.createDataFrame(merged.map(to_row), StructType(fields))
+    return _agg(spark, path, keys, specs, derived_keys, partition_filter,
+                prefix=True)

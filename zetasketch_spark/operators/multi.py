@@ -12,15 +12,15 @@ the partial stage; merged + result columns after the full pipeline.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
-from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StructField, StructType)
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from zetasketch_spark.operators.agg import PARTITION_COL, ROWS_COL, _key_fields
+from zetasketch_spark.operators.agg import (
+    PARTITION_COL, ROWS_COL, _apply_grouped, _key_fields, _partial_schema,
+    _positional)
 from zetasketch_spark.sketches.base import SketchFamily
 
 
@@ -31,61 +31,40 @@ def multi_sketch_partial(df: DataFrame, keys: list[str],
     the rest go through the generic per-batch pandas fallback
     (`sketches/base.py::_SeriesPrepared`) — state-equal to the pandas
     fabric, just not zero-copy."""
-    names = list(specs)
-    cols = sorted({c for c, _ in specs.values()})
-    out_schema = StructType(
-        _key_fields(df, keys)
-        + [StructField(n, BinaryType()) for n in names]
-        + [StructField(ROWS_COL, LongType()),
-           StructField(PARTITION_COL, IntegerType())]
-    )
-    keys_t = tuple(keys)
+    return _arrow_partial(df, keys, specs)
+
+
+def _arrow_partial(df: DataFrame, keys: list[str], specs: dict,
+                   skip_partitions: frozenset = frozenset()) -> DataFrame:
+    """The ``mapInArrow`` partial: every batch goes through
+    ``fastscan._fold``. ``skip_partitions``: partition ids to return
+    immediately for — ``agg.sketch_partial``'s checkpoint-resume hook."""
+    out_schema = _partial_schema(_key_fields(df, keys), list(specs))
+    cols = [*keys, *sorted({c for c, _ in specs.values()} - set(keys))]
 
     def fn(batches):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        from zetasketch_spark.operators.fastscan import _drain, _fold
+
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
+        if pid in skip_partitions:
+            return
         acc: dict = {}
         rows: dict = {}
         for batch in batches:
-            prepared = {}
-            for name, (col, fam) in specs.items():
-                val = batch.column(batch.schema.get_field_index(col))
-                prepared[name] = fam.prepare_arrow(val)
-            if keys_t:
-                kpdf = pa.Table.from_batches([batch]).select(list(keys_t)).to_pandas()
-                groups = kpdf.groupby(list(keys_t), sort=False, dropna=False).indices
-            else:
-                groups = {(): np.arange(batch.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                states = acc.get(key)
-                if states is None:
-                    states = {n: specs[n][1].make() for n in names}
-                    acc[key] = states
-                    rows[key] = 0
-                for n in names:
-                    specs[n][1].update_prepared(states[n], prepared[n][idx])
-                rows[key] += len(idx)
+            batch = batch.rename_columns(cols)
+            _fold(batch, {k: batch[k] for k in keys}, specs, acc, rows)
         if acc:
             out = pd.DataFrame(
-                [[*k, *[specs[n][1].serialize(s[n]) for n in names], rows[k], pid]
-                 for k, s in acc.items()],
-                columns=[*keys_t, *names, ROWS_COL, PARTITION_COL],
-            )
+                [[*k, *blobs, n, pid] for k, blobs, n in _drain(acc, rows, specs)],
+                columns=[*keys, *specs, ROWS_COL, PARTITION_COL])
             yield pa.RecordBatch.from_pandas(
                 out, schema=to_arrow_schema(out_schema), preserve_index=False)
 
-    # backtick-quote names so a dot in a JSON-ingested column name is
-    # never parsed as a nested-field path
-    def _ref(name):
-        return F.col("`" + name.replace("`", "``") + "`")
-
-    return df.select(*[_ref(k) for k in keys],
-                     *[_ref(c) for c in cols]).mapInArrow(fn, out_schema)
+    return _positional(df, cols).mapInArrow(fn, out_schema)
 
 
 def multi_sketch_agg(df: DataFrame, keys: list[str],
@@ -107,7 +86,7 @@ def multi_sketch_agg(df: DataFrame, keys: list[str],
         return pd.DataFrame([[*head, *blobs, int(pdf[ROWS_COL].sum())]],
                             columns=[*keys, *names, ROWS_COL])
 
-    merged = partials.groupBy(*keys).applyInPandas(merge_fn, merged_schema)
+    merged = _apply_grouped(partials, keys, merge_fn, merged_schema)
 
     out = merged
     for n in names:
